@@ -52,7 +52,8 @@ def main(argv):
             # ValueError (spec '') and would have consumed the value token
             # as an artifact path.
             if a == "--reset":
-                assert i + 1 < len(rest), "--reset needs a <query>@<sf>=<v> argument"
+                if i + 1 >= len(rest):
+                    sys.exit("--reset needs a <query>@<sf>=<v> argument")
                 spec = rest[i + 1]
                 i += 1
             else:
@@ -60,7 +61,8 @@ def main(argv):
                 spec = spec.lstrip("=")
             name_sf, val = spec.split("=")
             name, sf = name_sf.split("@")
-            assert sf in ("sf01", "sf1"), f"bad reset sf: {sf}"
+            if sf not in ("sf01", "sf1"):
+                sys.exit(f"bad reset sf: {sf}")
             resets.append((name, sf, float(val)))
         else:
             paths.append(a)

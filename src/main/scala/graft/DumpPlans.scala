@@ -85,7 +85,7 @@ object DumpPlans {
     sb.append("`WholeStageCodegen` spans, and no `CartesianProduct`/UDF nodes\n")
     sb.append("(asserted suite-wide by PlanSpec).\n")
     for (name <- Headline) {
-      // auditPlan: see Cached — keeps withCached-wrapped builders' full
+      // auditPlan: see Cached — keeps withPinned/pinned builders' full
       // plans visible instead of an eagerly checkpointed RDD scan
       val plan = graft.queries.Cached.auditPlan {
         val df = SparkEntry.queries(name)(spark, sfDir)

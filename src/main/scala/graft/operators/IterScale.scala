@@ -12,9 +12,9 @@ import org.apache.spark.sql.SparkSession
   * graph.
   *
   * The fix is possible precisely because every iterative operator here
-  * ([[PageRank]], [[BfsLevels]], [[Sssp]]) materializes its final state
-  * EAGERLY inside the call (the `finish`/localCheckpoint hygiene): all the
-  * per-round shuffles execute while the override below is in force, and
+  * ([[PageRank]], [[Sssp]]) materializes its final state EAGERLY inside
+  * the call (the final localCheckpoint hygiene): all the per-round
+  * shuffles execute while the override below is in force, and
   * the caller's session conf is restored before the (already-materialized)
   * result frame is returned. A lazily-returned plan could not be scaled
   * this way — it would execute after the `finally`.

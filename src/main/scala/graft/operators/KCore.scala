@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * Exact-arithmetic, bounded-round formulation: `rounds` synchronous peel
   * sweeps (every round removes ALL currently-under-k nodes at once), which
   * a DuckDB oracle replays as unrolled CTEs — the same discipline as
-  * [[PageRank]]/[[BfsLevels]]. A fixed small `rounds` keeps the oracle
+  * [[PageRank]]/[[Sssp]]. A fixed small `rounds` keeps the oracle
   * SQL-expressible; convergence is visible in the census (two equal
   * consecutive rounds = fixed point reached).
   *

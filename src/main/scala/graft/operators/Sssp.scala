@@ -4,16 +4,15 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Weighted single-source(-set) shortest paths — synchronous Bellman-Ford
-  * rounds, the weighted sibling of [[BfsLevels]] and the fifth member of
-  * the iterative-graph family (rank flow, label flooding, frontier
-  * expansion, monotone deletion, now weighted relaxation). Same scale
-  * discipline:
+  * rounds, the weighted-relaxation member of the iterative-graph family
+  * (rank flow, label flooding, monotone deletion). BFS levels are this
+  * operator at unit weights (`q_bfs_levels`). Same scale discipline:
   *
   *   - one shuffle per round (the min-dist aggregate keyed by node); the
   *     edge frame is materialized once and reused;
   *   - distances are exact integer weight sums — bit-deterministic under
   *     any partitioning, replayable by the oracle's unrolled CTEs;
-  *   - lineage truncates on a cadence, not per round.
+  *   - the small per-round state is truncated every round (see the loop).
   *
   * After round i every node carries the cheapest path using ≤ i edges —
   * the classic Bellman-Ford invariant — so `rounds` bounds path length,
@@ -25,7 +24,8 @@ object Sssp {
 
   /** (node, dist) for every node reachable from `seeds` within `rounds`
     * edges. `edges(src, dst, w)` is directed with non-negative long
-    * weights; symmetrize before calling for undirected semantics.
+    * weights; symmetrize before calling for undirected semantics. With
+    * every w = 1, dist is the BFS hop level.
     *
     * The edge frame is materialized ONCE into the compressed COLUMNAR
     * cache (`persist`), not `localCheckpoint`: the round-9 sf10 probes
@@ -39,29 +39,24 @@ object Sssp {
     *   - columnar persist: the cache builds inside round 1's job at
     *     parquet-scan speed (~10× smaller than row blocks) and every
     *     later round re-reads it shuffle-free.
-    * `materializeEdges = false` skips the cache for single-round calls or
-    * callers that manage their own edge materialization. */
-  def distances(edges: DataFrame, seeds: DataFrame, rounds: Int,
-      checkpointEvery: Int = 1, materializeEdges: Boolean = true): DataFrame = {
+    *
+    * Round 13 (IterScale): the per-round reduce parallelism scales with
+    * the graph — the iterative family's fixed-partition rounds were the
+    * one superlinear decade ratio. The whole fixed point executes eagerly
+    * inside the scope (the final localCheckpoint), so the session conf is
+    * restored before return. */
+  def distances(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"),
+    val e = edges.select(col("src").cast("long"), col("dst").cast("long"),
         col("w").cast("long"))
       .filter(col("w") >= 0L)
-    val e = if (materializeEdges)
-      e0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else e0
-    // round 13: per-round reduce parallelism scales with the graph
-    // (IterScale; see BfsLevels — same rationale, same eager-inside-scope
-    // guarantee from the final localCheckpoint)
-    def run(): DataFrame = relaxLoop(e, seeds, rounds, checkpointEvery,
-      materializeEdges)
-    if (materializeEdges)
-      IterScale.withEdgeScaledShuffle(e.sparkSession, e.count())(run())
-    else run()
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    IterScale.withEdgeScaledShuffle(e.sparkSession, e.count()) {
+      relaxLoop(e, seeds, rounds)
+    }
   }
 
-  private def relaxLoop(e: DataFrame, seeds: DataFrame, rounds: Int,
-      checkpointEvery: Int, materializeEdges: Boolean): DataFrame = {
+  private def relaxLoop(e: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
     var dist = seeds.select(col("node").cast("long"))
       .distinct().withColumn("dist", lit(0L))
     // DELTA relaxation (round 10, the classic Bellman-Ford frontier
@@ -87,34 +82,33 @@ object Sssp {
         .select(col("dst").as("node"), (col("dist") + col("w")).as("nd"))
         .groupBy("node").agg(min("nd").as("nd"))
       // one full-outer merge yields BOTH the new state and the delta:
-      // improved = first visit (od null) or a strictly better offer
+      // improved = first visit (od null) or a strictly better offer. At
+      // unit weights a visited node's level is FINAL (every later offer
+      // is larger), so the delta is exactly the first-visit set.
       val merged = dist.withColumnRenamed("dist", "od")
         .join(offers, Seq("node"), "full_outer")
         .select(col("node"), least(col("od"), col("nd")).as("dist"),
           (col("od").isNull || (col("nd").isNotNull && col("nd") < col("od")))
             .as("chg"))
-      // Cadence default is EVERY round, not every 3 (round-9 sf10
-      // lesson): the loop references merged_prev TWICE — the dist merge
-      // branch and the frontier broadcast build — and a
-      // BroadcastExchange is never reused against a shuffle exchange of
-      // the same subplan, so an untruncated lineage re-executes
-      // ~2^rounds times (measured 343 s with cadence 3 vs the per-round-
-      // truncated time at sf10; merged is ≤ |visited| rows of ~17 bytes
-      // — truncating it is noise). PageRank keeps cadence 3: its loop
-      // references the prior state ONCE, so its lineage grows linearly.
-      val m = if (i % checkpointEvery == 0 && i < rounds) merged.localCheckpoint()
-        else merged
+      // Truncate EVERY round, not every 3 (round-9 sf10 lesson): the
+      // loop references merged_prev TWICE — the dist merge branch and
+      // the frontier broadcast build — and a BroadcastExchange is never
+      // reused against a shuffle exchange of the same subplan, so an
+      // untruncated lineage re-executes ~2^rounds times (measured 343 s
+      // with cadence 3 vs the per-round-truncated time at sf10; merged
+      // is ≤ |visited| rows of ~17 bytes — truncating it is noise).
+      // PageRank truncates every 4th round: its loop references the
+      // prior state ONCE, so its lineage grows linearly.
+      val m = if (i < rounds) merged.localCheckpoint() else merged
       dist = m.select("node", "dist")
       frontier = m.filter(col("chg")).select("node", "dist")
     }
-    if (materializeEdges) {
-      // hygiene for long-lived sessions (round-9 advisor): pin the small
-      // result, then release the edge cache — the harness's clearCache
-      // frees the pin; repeated library calls no longer accumulate
-      // executor storage
-      val out = dist.localCheckpoint()
-      e.unpersist()
-      out
-    } else dist
+    // hygiene for long-lived sessions (round-9 advisor): pin the small
+    // result, then release the edge cache — the harness's clearCache
+    // frees the pin; repeated library calls no longer accumulate
+    // executor storage
+    val out = dist.localCheckpoint()
+    e.unpersist()
+    out
   }
 }

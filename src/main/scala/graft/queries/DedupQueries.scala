@@ -96,7 +96,7 @@ object DedupQueries extends QueryModule {
       // persist: the shingle-set table feeds three consumers (band minhash +
       // both sides of the candidate-pair join) — cache beats recomputing the
       // split/transform scan 3× (5k rows/MBs at sf0.1; at 100 TB this is a
-      // checkpoint to storage instead). withCached unpersists in finally.
+      // checkpoint to storage instead). withPinned unpersists in finally.
       val d = shingled(collapseExactDups(Tables.documents(s, dir)))
         .select(col("doc_id"), col("shingles"))
       Cached.withPinned(d) { case Seq(d) => // r15: pin + plan-truncate

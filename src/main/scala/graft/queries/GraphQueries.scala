@@ -161,9 +161,10 @@ object GraphQueries extends QueryModule {
   // -- multi-source BFS levels over the same symmetrized customer–supplier
   //    purchase graph: min-hop distance from the first five suppliers,
   //    reported as a per-level census. Level-synchronous frontier
-  //    expansion (graft.operators.BfsLevels): one min-dist shuffle per
-  //    round, exact integer distances, edge side materialized once — the
-  //    oracle unrolls the same rounds as CTEs (the PageRank discipline).
+  //    expansion is unit-weight SSSP (graft.operators.Sssp): one min-dist
+  //    shuffle per round, exact integer distances, edge side materialized
+  //    once — the oracle unrolls the same rounds as CTEs (the PageRank
+  //    discipline).
   //    On the bipartite purchase graph every reachable node sits within
   //    MaxHops of the seed set, so the census also certifies saturation.
   private val MaxHops = 4
@@ -191,7 +192,9 @@ object GraphQueries extends QueryModule {
         .select(col("e.src").as("src"), col("e.dst").as("dst"))
       val seeds = (0L until 5L).map(k => 2 * k + 1).toDF("node")
       val nodes = edges.select(col("src").as("node")).distinct()
-      val levels = graft.operators.BfsLevels.levels(edges, seeds, MaxHops)
+      val levels = graft.operators.Sssp.distances(
+          edges.withColumn("w", lit(1L)), seeds, MaxHops)
+        .select(col("node"), col("dist").cast("int").as("dist"))
       val census = levels.groupBy("dist").agg(count(lit(1)).as("n_nodes"))
       val unreached = nodes.join(levels, Seq("node"), "left_anti")
         .agg(coalesce(count(lit(1)), lit(0L)).as("n_nodes"))
@@ -938,10 +941,10 @@ object GraphQueries extends QueryModule {
       val flagged = orderedCoPairs(li)
         .withColumn("is_delta",
           pmod(col("a") * 31 + col("b"), lit(10)) >= 8)
-      // withCached, not a bare persist (round-13 advisor): the builder
+      // withPinned, not a bare persist (round-13 advisor): the builder
       // only CONSTRUCTS the lazy plan — a persist/unpersist pair around
       // construction is dead by the time the runner executes the frame.
-      // withCached pins + materializes the edge set, pins the 1-row
+      // withPinned pins + materializes the edge set, pins the 1-row
       // result, then releases the input.
       Cached.withPinned(flagged) { case Seq(flagged) => // r15: pin + plan-truncate
         // Round 13 (verdict #3): DEGREE-ORDERED COMPACT-FORWARD form

@@ -84,7 +84,7 @@ object PipelineQueries extends QueryModule {
           encode(col("payload"), "UTF-8").as("content")))
       // --- the REAL pipeline: decode → sections → chunks ---
       // every stage is consumed by both its per-stage count AND the next
-      // stage, so the whole chain is cached stage by stage (withCached
+      // stage, so the whole chain is cached stage by stage (withPinned
       // materializes in order: parse runs once, section-extract once,
       // chunking once) and unpersisted in finally
       import s.implicits._

@@ -98,9 +98,9 @@ object Cached {
     override def initialValue: java.lang.Boolean = false
   }
 
-  /** Build with [[withCached]] transparent — no persist, nothing
-    * executed — so the FULL logical/physical plan of the body stays
-    * visible to the fleet plan audits (PlanSpec/WindowAuditSpec/
+  /** Build with [[withPinned]] and [[pinned]] transparent — no persist,
+    * nothing executed — so the FULL logical/physical plan of the body
+    * stays visible to the fleet plan audits (PlanSpec/WindowAuditSpec/
     * DumpPlans) without the audits paying (or racing) the pins'
     * materialization. */
   def auditPlan[T](body: => T): T = {
@@ -130,25 +130,7 @@ object Cached {
     if (noPin.get()) p else org.apache.spark.sql.graft.PlanPin.truncated(p)
   }
 
-  def withCached(inputs: DataFrame*)(body: => DataFrame): DataFrame = {
-    if (audit.get()) return body
-    inputs.foreach(_.persist())
-    try {
-      inputs.foreach(_.count())
-      // pin the (small) final result in the SQL cache: eager, columnar,
-      // and — unlike a localCheckpoint — freed by the runner's
-      // clearCache. Nested withCached returns an already-pinned frame;
-      // re-persisting it is a documented Spark no-op (level kept).
-      // (Round-10 interleaved A/B, 6 JVMs: solo-time distributions of the
-      // two pins fully overlap — the switch costs nothing solo and buys
-      // deterministic reclaim in-sweep.)
-      val out = body.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      out.count()
-      out
-    } finally inputs.foreach(_.unpersist())
-  }
-
-  /** [[withCached]] + lineage truncation (round 15): `body` receives a
+  /** Persist + lineage truncation (round 15): `body` receives a
     * PLAN-PINNED twin of each input — same rows, one-node logical plan
     * (org.apache.spark.sql.graft.PlanPin) — so a composition that
     * re-references the inputs many times builds consumer plans of leaf

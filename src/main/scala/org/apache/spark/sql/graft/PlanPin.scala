@@ -14,7 +14,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   * COMPOUNDS through the composition: q_curation_e2e's final census plan
   * reached 3,905 Exchange nodes / 5.8 MB of formatted text while executing
   * almost nothing (the shared subtrees are persisted by
-  * `graft.queries.Cached.withCached`). Catalyst walks — analysis,
+  * `graft.queries.Cached.withPinned`/`pinned`). Catalyst walks — analysis,
   * optimizer batches, and the CacheManager's canonicalize-and-match on
   * every consumer — are tree walks, so the DRIVER pays the duplicated
   * size on every round trip; at sf0.1 plan work was ~2/3 of that query's

@@ -47,6 +47,40 @@ class PageRankSpec extends SparkSpec {
     assert(wSrc === wUnion)
   }
 
+  // One round loop serves all three entry points: global rank is
+  // personalized rank with every node seeded, and weighted rank with unit
+  // weights is global rank — both must hold bit for bit.
+  private def randomDirected(seed: Int): Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
+    Seq.fill(300)((rnd.nextInt(35).toLong, rnd.nextInt(35).toLong))
+      .filter { case (a, b) => a != b }.distinct
+  }
+
+  private def asMap(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  test("personalizedRanks seeded with every node equals ranks") {
+    val edges = randomDirected(23)
+    val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
+    for (parts <- Seq(1, 6)) {
+      val df = edges.toDF("src", "dst").repartition(parts)
+      val global = asMap(PageRank.ranks(df, 5))
+      val allSeeded = asMap(
+        PageRank.personalizedRanks(df, nodes.toDF("node"), 5))
+      assert(allSeeded === global, s"at $parts partitions")
+    }
+  }
+
+  test("weightedRanks with unit weights equals ranks") {
+    val edges = randomDirected(29)
+    for (parts <- Seq(1, 6)) {
+      val df = edges.toDF("src", "dst").repartition(parts)
+      val global = asMap(PageRank.ranks(df, 5))
+      val unit = asMap(PageRank.weightedRanks(df.withColumn("w", lit(1L)), 5))
+      assert(unit === global, s"at $parts partitions")
+    }
+  }
+
   test("sink nodes keep the damping floor; hubs accumulate mass") {
     // star: 1..5 -> 0; node 0 has no out-edges (sink)
     val edges = (1L to 5L).map(i => (i, 0L))

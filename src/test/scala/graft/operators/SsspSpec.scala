@@ -34,4 +34,19 @@ class SsspSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     assert(!d.contains(4L))
   }
+
+  test("unit weights give BFS hop levels") {
+    // 0 → 1 → 2 → 3 with a 0 → 2 shortcut and a duplicated edge; 4 → 0
+    // is never reached. Seed 0 is listed twice, seed 9 has no edges.
+    val hops = Seq((0L, 1L), (1L, 2L), (1L, 2L), (2L, 3L), (0L, 2L), (4L, 0L))
+      .toDF("src", "dst").withColumn("w", lit(1L))
+    val seeds = Seq(0L, 0L, 9L).toDF("node")
+    def levels(rounds: Int) = Sssp.distances(hops, seeds, rounds)
+      .as[(Long, Long)].collect().toMap
+    assert(levels(1) == Map(0L -> 0L, 9L -> 0L, 1L -> 1L, 2L -> 1L))
+    val full = Map(0L -> 0L, 9L -> 0L, 1L -> 1L, 2L -> 1L, 3L -> 2L)
+    assert(levels(2) == full)
+    // a visited node's level is final: rounds past the depth change nothing
+    assert(levels(4) == full)
+  }
 }

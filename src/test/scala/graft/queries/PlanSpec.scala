@@ -11,7 +11,7 @@ class PlanSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  // auditPlan: withCached-wrapped builders otherwise return an eagerly
+  // auditPlan: withPinned/pinned builders otherwise return an eagerly
   // checkpointed Scan ExistingRDD, which would blind every assertion here
   private def physicalPlan(name: String): String =
     Cached.auditPlan(
@@ -77,44 +77,46 @@ class PlanSpec extends SparkSpec {
     // strategy) go blind. The r15 round shipped the pins unconditional
     // and this test red (537/538) — the pin changes plan SIZE only, so
     // the posture checked here is the posture the pinned plan executes.
-    val exec = Cached.posturePlan(
-      SparkEntry.queries("q_full_scores")(spark, sfDir)
-        .queryExecution.executedPlan)
-    // 1. events is read through the ONE persisted dims frame: the top-level
-    // plan must contain no direct file scan of events (only
-    // InMemoryTableScans over the shared cache, which materializes from a
-    // single scan). Removing the persist puts FileSourceScanExec nodes
-    // right back into this tree.
-    val directScans = exec.collectWithSubqueries {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec
-        if f.toString.contains("events") => f
-    }
-    assert(directScans.isEmpty,
-      s"events scanned directly ${directScans.size}x — dims cache sharing broken")
-    assert(exec.toString.contains("InMemoryTableScan"), "dims frame not cached")
-    // 2. every ranking window over entities is partitioned (bucketed
-    // two-pass rank — rank() over the quantized score, percent_rank tie
-    // semantics); an unpartitioned windowspec starts with a sort spec as
-    // its first argument
-    val winLines = exec.toString.linesIterator
-      .filter(_.contains("windowspecdefinition(")).toSeq
-    val unpartitioned = winLines.filter(
-      _.matches(""".*windowspecdefinition\([^,]*\s(ASC|DESC)[^,]*,.*"""))
-    // the only allowed unpartitioned window runs over the ≤101 BUCKET
-    // count rows (cumulative offsets), never over entity rows
-    assert(unpartitioned.forall(l => l.contains("_bkt") && l.contains("sum(_bn")),
-      s"unpartitioned window over non-bucket rows:\n${unpartitioned.mkString("\n")}")
-    // ONE line must carry both: the rank function AND the _bkt partition
-    // (two separate lines would let the entity rank drift to another
-    // partitioning while the offsets window still mentions _bkt)
-    assert(winLines.exists(l =>
-      l.contains("rank(") && l.contains("windowspecdefinition(_bkt")),
-      "bucketed rank window missing or not partitioned by _bkt")
-    // 3. the scalar/offset attachments broadcast
-    assert(exec.toString.contains("BroadcastHashJoin"))
-    // posture mode materialized the shared frames into the test session's
-    // cache; reclaim them so later suites start clean
-    spark.catalog.clearCache()
+    // posture mode materializes the shared frames into the test session's
+    // cache; the finally reclaims them so later suites start clean even
+    // when an assertion fails
+    try {
+      val exec = Cached.posturePlan(
+        SparkEntry.queries("q_full_scores")(spark, sfDir)
+          .queryExecution.executedPlan)
+      // 1. events is read through the ONE persisted dims frame: the top-level
+      // plan must contain no direct file scan of events (only
+      // InMemoryTableScans over the shared cache, which materializes from a
+      // single scan). Removing the persist puts FileSourceScanExec nodes
+      // right back into this tree.
+      val directScans = exec.collectWithSubqueries {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec
+          if f.toString.contains("events") => f
+      }
+      assert(directScans.isEmpty,
+        s"events scanned directly ${directScans.size}x — dims cache sharing broken")
+      assert(exec.toString.contains("InMemoryTableScan"), "dims frame not cached")
+      // 2. every ranking window over entities is partitioned (bucketed
+      // two-pass rank — rank() over the quantized score, percent_rank tie
+      // semantics); an unpartitioned windowspec starts with a sort spec as
+      // its first argument
+      val winLines = exec.toString.linesIterator
+        .filter(_.contains("windowspecdefinition(")).toSeq
+      val unpartitioned = winLines.filter(
+        _.matches(""".*windowspecdefinition\([^,]*\s(ASC|DESC)[^,]*,.*"""))
+      // the only allowed unpartitioned window runs over the ≤101 BUCKET
+      // count rows (cumulative offsets), never over entity rows
+      assert(unpartitioned.forall(l => l.contains("_bkt") && l.contains("sum(_bn")),
+        s"unpartitioned window over non-bucket rows:\n${unpartitioned.mkString("\n")}")
+      // ONE line must carry both: the rank function AND the _bkt partition
+      // (two separate lines would let the entity rank drift to another
+      // partitioning while the offsets window still mentions _bkt)
+      assert(winLines.exists(l =>
+        l.contains("rank(") && l.contains("windowspecdefinition(_bkt")),
+        "bucketed rank window missing or not partitioned by _bkt")
+      // 3. the scalar/offset attachments broadcast
+      assert(exec.toString.contains("BroadcastHashJoin"))
+    } finally spark.catalog.clearCache()
   }
 
   test("q_orders_pagination: row ranking is bucket-partitioned, not global") {
