@@ -550,8 +550,15 @@ object Bench {
             present.filterNot(prevSf1.contains).headOption
               .orElse(present.lastOption)
           }).toSet
-        if (reserved.nonEmpty)
+        if (reserved.nonEmpty) {
           System.err.println(s"[bench] sf1 tier-0 reserve: ${reserved.mkString(", ")}")
+          // what the reserve is expected to cost this round, from the freeze
+          val unfrozen = reserved.filterNot(frozen1.contains).toSeq.sorted
+          System.err.println(
+            f"[bench] sf1 reserve frozen_sf1_s=${reserved.toSeq.flatMap(frozen1.get).sum}%.3f " +
+            s"queries=${reserved.size} " +
+            s"unfrozen=${if (unfrozen.isEmpty) "-" else unfrozen.mkString(",")}")
+        }
         val ordered = benched.sortBy { q =>
           val tier =
             if (reserved(q.name)) -1

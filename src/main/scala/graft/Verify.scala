@@ -117,12 +117,17 @@ object Verify {
             // loop at sf0.01 outlived a first-cut 15 s window — hence
             // 45 s, still ≪ the 180 s query timeout). The emergency path
             // remains as the true-zombie fallback.
-            if (done.incrementAndGet() % 32 == 0 &&
-                !graft.plans.CacheHygiene.tryClear(spark, 45)) {
-              val n = graft.plans.CacheHygiene.emergencyUnpersist(spark)
-              System.err.println(
-                s"[verify] clearCache skipped (queries in flight) — " +
-                  s"emergency-unpersisted $n RDDs")
+            // One structured line per boundary: how long the drain
+            // waited for the write lock, whether it cleared, and how many
+            // RDDs the emergency path unpersisted when it did not.
+            val k = done.incrementAndGet()
+            if (k % 32 == 0) {
+              val t0 = System.nanoTime()
+              val cleared = graft.plans.CacheHygiene.tryClear(spark, 45)
+              val waitedMs = (System.nanoTime() - t0) / 1000000
+              val n = if (cleared) 0 else graft.plans.CacheHygiene.emergencyUnpersist(spark)
+              System.err.println(s"[verify] drain n=$k waited_ms=$waitedMs " +
+                s"cleared=$cleared emergency_unpersisted=$n")
             }
             if (released.compareAndSet(false, true)) permits.release()
           }
