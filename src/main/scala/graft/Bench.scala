@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every registered query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query seconds.
   *
@@ -112,21 +110,7 @@ object Bench {
     val realOut = System.out
     System.setOut(System.err)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the codegen LRU defaults to 100 generated-class entries; a
-      // ~240-query sweep (plus the sf1 repeat) cycles ~500 plan shapes
-      // through it, so by mid-sweep EVERY query recompiles every stage —
-      // janino defines serialize on a class-load monitor and the
-      // round-12 boxed-kill dumps caught executor threads queued there.
-      // 2000 entries keeps the sweep's working set resident.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     // Warmup: exercise scan + shuffle + codegen paths once, untimed.
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
@@ -330,8 +314,7 @@ object Bench {
     // neighbor's leak is charged to its number. Everything else keeps
     // alphabetical order. The freeze is a per-query min, so reordering
     // can only tighten it.
-    val flagshipCut =
-      sys.env.getOrElse("SPARK_GRAFT_FLAGSHIP_CUT", "3.0").toDouble
+    val flagshipCut = 3.0
     val benchedAll = graft.queries.Registry.all.filter(_.bench)
     val flagNames = benchedAll.map(_.name)
       .filter(n => frozen01.get(n).exists(_ >= flagshipCut)).toSet
@@ -361,10 +344,9 @@ object Bench {
     // flagships on a steal-prone host (this round's baseline artifact
     // carries three warmup boxed-kill diags), so exactly the queries the
     // warm-up exists for ran JIT-COLD in the timed sweep. The box exists
-    // only to keep a hung warm-up from eating the sweep — 45 s default,
-    // env-overridable, still bounded.
-    val warmBox =
-      sys.env.getOrElse("SPARK_GRAFT_WARM_BOX", "45").toLong
+    // only to keep a hung warm-up from eating the sweep — 45 s, still
+    // bounded.
+    val warmBox = 45L
     if (new java.io.File(warmDir, "lineitem.parquet").exists()) {
       val t0 = System.nanoTime()
       benched.filter(q => flagNames(q.name)).reverse
@@ -393,7 +375,7 @@ object Bench {
       case (n, Some(t)) if !frozen01.contains(n) && t > 5.0 =>
         n -> t / 5.0
     }
-    val rerunCap = sys.env.getOrElse("SPARK_GRAFT_RERUN_CAP", "40").toInt
+    val rerunCap = 40
     val rerun = {
       val sorted = rerunAll.sortBy(-_._2).map(_._1)
       if (sorted.size > rerunCap)
@@ -434,10 +416,8 @@ object Bench {
     // wall time. Cap it (worst-over-freeze first, matching the expensive
     // cap) and additionally bound the whole cheap retry pass by a wall
     // budget; anything dropped is logged like the expensive overflow.
-    val cheapCap =
-      sys.env.getOrElse("SPARK_GRAFT_FINAL_CHEAP_CAP", "20").toInt
-    val cheapBudgetSec =
-      sys.env.getOrElse("SPARK_GRAFT_FINAL_CHEAP_BUDGET", "60").toDouble
+    val cheapCap = 20
+    val cheapBudgetSec = 60.0
     val cheapOver = cheapOverAll.take(cheapCap)
     if (cheapOverAll.size > cheapCap)
       System.err.println(s"[bench] final pass: cheap >2x lines beyond " +
@@ -759,7 +739,7 @@ object Bench {
     // COMPACT stdout line, budgeted to survive the 2000-char tail capture
     // (leave ~250 chars of headroom for sbt's "[success] ..." trailer and
     // anything else the build tool appends after us).
-    val budget = sys.env.getOrElse("SPARK_GRAFT_LINE_BUDGET", "1750").toInt
+    val budget = 1750
     val bySlow = results.sortBy(-_._2)
     // compact self-adjudication: any line STILL >2× freeze after the final
     // pass ships its full attempt list — the artifact itself then proves

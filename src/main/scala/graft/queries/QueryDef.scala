@@ -101,7 +101,7 @@ object Cached {
   /** Build with [[withPinned]] and [[pinned]] transparent — no persist,
     * nothing executed — so the FULL logical/physical plan of the body
     * stays visible to the fleet plan audits (PlanSpec/WindowAuditSpec/
-    * DumpPlans) without the audits paying (or racing) the pins'
+    * `graft.Tool plans`) without the audits paying (or racing) the pins'
     * materialization. */
   def auditPlan[T](body: => T): T = {
     audit.set(true)

@@ -2,9 +2,9 @@ package org.apache.spark.graft
 
 import org.apache.spark.SparkContext
 
-/** `SparkContext.listenerBus` is `private[spark]`; SpillProbe needs to
-  * drain it so the per-query task-metric counters its listener maintains
-  * are complete before being read (listener events post asynchronously —
+/** `SparkContext.listenerBus` is `private[spark]`; graft.Tool's timing
+  * loop needs to drain it so the per-query task-metric counters its
+  * listeners maintain are complete before being read (listener events post asynchronously —
   * reading right after the action undercounts the last stages' spill).
   * Same introspection pattern as [[org.apache.spark.rdd.GraftRddIntrospect]].
   */

@@ -1,7 +1,5 @@
 package graft.plans
 
-import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
-
 import graft.SparkSpec
 
 /** Fleet-wide plan-SIZE audit (round-7 postmortem): `q_bradley_terry`
@@ -22,40 +20,16 @@ import graft.SparkSpec
   */
 class PlanComplexitySpec extends SparkSpec {
 
-  private val sfDir = "/root/testdata/sf0.001"
   private val MaxNodes = 5000
-  private val BuildBoxSec = 120L
-
-  private def logicalNodeCount(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int =
-    p.collect { case n => n }.size
 
   test("every registered query analyzes promptly and under the node bound") {
-    // daemon pool: a query hung in analysis must fail THIS test with its
-    // name, not hang the suite (the round-7 failure mode for sbt test)
-    val pool = Executors.newCachedThreadPool(r => {
-      val t = new Thread(r, "plan-audit")
-      t.setDaemon(true)
-      t
-    })
-    val offenders = graft.queries.Registry.all.flatMap { q =>
-      val fut = pool.submit(new java.util.concurrent.Callable[Int] {
-        def call(): Int = graft.queries.Cached.auditPlan(
-          logicalNodeCount(q.build(spark, sfDir).queryExecution.analyzed))
-      })
-      try {
-        val nodes = fut.get(BuildBoxSec, TimeUnit.SECONDS)
-        if (nodes > MaxNodes)
-          Some(s"${q.name}: analyzed plan has $nodes nodes (> $MaxNodes) — " +
-            "likely an iterative loop missing localCheckpoint cadence")
-        else None
-      } catch {
-        case _: TimeoutException =>
-          fut.cancel(true)
-          Some(s"${q.name}: analysis did not finish in ${BuildBoxSec}s — " +
-            "exponential lineage (see round-7 q_bradley_terry postmortem)")
-        case e: Throwable =>
-          Some(s"${q.name}: build threw ${Option(e.getCause).getOrElse(e)}")
-      }
+    // FleetPlans boxes each build + analysis at BuildBoxSec on a daemon
+    // pool and reports a timeout or a throw by name
+    val offenders = FleetPlans.offenders() { (_, f) =>
+      if (f.analyzedNodes > MaxNodes)
+        Seq(s"analyzed plan has ${f.analyzedNodes} nodes (> $MaxNodes) — " +
+          "likely an iterative loop missing localCheckpoint cadence")
+      else Nil
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }

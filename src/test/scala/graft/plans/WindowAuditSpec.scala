@@ -1,7 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import graft.SparkSpec
 
 /** Fleet-wide window audit: NO query in the registry may plan an
@@ -13,20 +11,10 @@ import graft.SparkSpec
   * (pmod(col, 1)), which this audit sees as a non-empty spec — so a clean
   * driver bench log is an invariant this suite enforces, not a hope.
   *
-  * Walks the pre-AQE physical plan of every registered query at sf0.001
-  * (plan shapes don't change with scale factor, only with stats-driven
-  * join picks, which don't affect window partitioning). */
+  * Reads the pre-AQE physical plan of every registered query at sf0.001
+  * from [[FleetPlans]] (plan shapes don't change with scale factor, only
+  * with stats-driven join picks, which don't affect window partitioning). */
 class WindowAuditSpec extends SparkSpec {
-
-  private val sfDir = "/root/testdata/sf0.001"
-
-  private def offendingWindows(plan: SparkPlan): Seq[String] =
-    plan.collect {
-      case w: WindowExec if w.partitionSpec.isEmpty =>
-        s"WindowExec(${w.windowExpression.map(_.sql).mkString(", ")})"
-      case w: WindowGroupLimitExec if w.partitionSpec.isEmpty =>
-        s"WindowGroupLimitExec(limit=${w.limit})"
-    }
 
   /** The pmod(col, 1) key silences the warning but still hashes every row
     * to ONE partition — it is a claim ("this frame is bounded"), not a
@@ -62,35 +50,21 @@ class WindowAuditSpec extends SparkSpec {
     "q_conversion_time" -> "histogram buckets (HistQuantiles p50/p90 cuts)",
     "q_roc_auc" -> "score-grid coarse buckets (GridCum offset pass)",
     "q_winsorized_mean" -> "histogram buckets (HistQuantiles p05/p95 cuts)",
-    "q_decile_lift" -> "score-grid coarse buckets (GridCum) + 10 decile rows")
-
-  private def constantKeyWindows(plan: SparkPlan): Seq[String] =
-    plan.collect {
-      case w: WindowExec if w.partitionSpec.exists(_.sql.contains("pmod")) =>
-        s"WindowExec(${w.windowExpression.map(_.sql).mkString(", ")})"
-      case w: WindowGroupLimitExec
-          if w.partitionSpec.exists(_.sql.contains("pmod")) =>
-        s"WindowGroupLimitExec(limit=${w.limit})"
-    }
+    "q_decile_lift" -> "score-grid coarse buckets (GridCum) + 10 decile rows",
+    "q_orders_pagination" -> "distinct order dates (aggregate rows)",
+    "q_zipf_slope" -> "top-K survivors of the LIMIT (≤ 200 rows)")
 
   test("no registered query plans an unpartitioned window") {
-    val bad = graft.queries.Registry.all.flatMap { q =>
-      val plan = graft.queries.Cached.auditPlan(
-        q.build(spark, sfDir).queryExecution.sparkPlan)
-      offendingWindows(plan).map(w => s"${q.name}: $w")
-    }
+    val bad = FleetPlans.offenders()((_, f) => f.unpartitionedWindows)
     assert(bad.isEmpty,
       s"unpartitioned windows found (single-task funnels):\n${bad.mkString("\n")}")
   }
 
   test("every constant-partition (pmod) window is declared with its bound") {
-    val undeclared = graft.queries.Registry.all.flatMap { q =>
-      val plan = graft.queries.Cached.auditPlan(
-        q.build(spark, sfDir).queryExecution.sparkPlan)
-      if (constantKeyWindows(plan).nonEmpty &&
-          !BoundedGlobalWindowQueries.contains(q.name)) {
-        Seq(s"${q.name}: ${constantKeyWindows(plan).mkString("; ")}")
-      } else Nil
+    val undeclared = FleetPlans.offenders() { (name, f) =>
+      if (f.pmodWindows.nonEmpty && !BoundedGlobalWindowQueries.contains(name))
+        Seq(f.pmodWindows.mkString("; "))
+      else Nil
     }
     assert(undeclared.isEmpty,
       "constant-partition windows without a declared bound — add to " +

@@ -249,15 +249,12 @@ class PlanSpec extends SparkSpec {
     // the build no matter which query it lands in. (Broadcast 1-row
     // crossJoins plan as BroadcastNestedLoopJoin — allowed; a
     // CartesianProduct means both sides were data-sized.)
-    val offenders = Registry.all
-      .filter(q => q.name != "q_neardup_clusters") // iterative: plan built per round
-      .flatMap { q =>
-        val plan = Cached.auditPlan(
-          q.build(spark, sfDir).queryExecution.executedPlan.toString)
-        val bad = Seq("CartesianProduct", "BatchEvalPython", "ScalaUDF")
-          .filter(plan.contains)
-        if (bad.isEmpty) None else Some(s"${q.name}: ${bad.mkString(",")}")
-      }
+    val offenders = graft.plans.FleetPlans.offenders(
+        skip = Set("q_neardup_clusters")) { (_, f) => // iterative: plan built per round
+      val bad = Seq("CartesianProduct", "BatchEvalPython", "ScalaUDF")
+        .filter(f.executedPlan.contains)
+      if (bad.isEmpty) Nil else Seq(bad.mkString(","))
+    }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

@@ -11,7 +11,7 @@ import StreamHolt.DailyPoint
   * engine's own StateOperatorProgress is the witness: after seeding
   * `nKeys`, a delta batch over `delta` keys must report
   * `numRowsUpdated == delta` while `numRowsTotal` stays `nKeys`. The
-  * 1M-key measurement lives in graft.StateScaleProbe (BASELINE.md); this
+  * 1M-key measurement lives in `graft.Tool statescale` (BASELINE.md); this
   * spec pins the invariant at suite scale so a regression (an operator
   * rewrite that iterates the store, a state-format change that rewrites
   * all rows) fails fast.
