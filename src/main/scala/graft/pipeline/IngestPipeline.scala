@@ -1,7 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.sources.Upsert
 import graft.text.{Chunker, HtmlText, PdfText, SectionExtractor}
 
@@ -84,21 +88,46 @@ object IngestPipeline {
     }
   }
 
-  /** Full run: parse → section → chunk → cross-run hash-dedup → append.
-    * Returns the freshly-persisted chunks. */
-  def ingest(spark: SparkSession, raw: Dataset[RawFiling], storePath: String): DataFrame = {
-    val chunks = chunkSections(extractSections(raw)).toDF()
-    val deduped = Upsert.dedupInBatch(chunks, "content_hash",
-      Seq(col("chunk_id").asc))
-    // pathExists, not try/catch: a transient read failure on an EXISTING
-    // store must fail the run (idempotent re-ingest retries), never
-    // silently disable cross-run dedup
-    val fresh =
-      if (Upsert.pathExists(spark, storePath))
-        Upsert.dedupGate(deduped,
-          spark.read.parquet(storePath).select("content_hash"), "content_hash")
-      else deduped
-    fresh.write.mode("append").parquet(storePath)
-    spark.read.parquet(storePath)
+  /** The store's schema: the [[ChunkRow]] columns [[ingest]] appends, all
+    * nullable, as parquet reads them back. Reading the store with it plans
+    * with no Spark job; a bare `spark.read.parquet` runs one to infer it. */
+  val StoreSchema: StructType =
+    StructType(Encoders.product[ChunkRow].schema.map(_.copy(nullable = true)))
+
+  /** One [[ingest]] batch's gate counts: chunks in, chunks dropped as
+    * duplicates within the batch, chunks dropped because the store already
+    * held their hash, and chunks appended (`rowsIn` is the sum of the other
+    * three). */
+  final case class GateCounts(rowsIn: Long, inBatchDups: Long,
+      crossRunDups: Long, kept: Long)
+
+  /** What one [[ingest]] call leaves: `store` is the whole store, read with
+    * [[StoreSchema]] — lazy, and planned with no Spark job. `counts` are
+    * taken by `Dataset.observe` on the write's own pass; reading them waits
+    * for the listener bus to deliver that pass's metrics. */
+  final class Ingested private[pipeline] (val store: DataFrame,
+      observed: Seq[Observation]) {
+    lazy val counts: GateCounts = {
+      val Seq(in, unique, kept) = observed.map { o =>
+        Await.result(o.future, 60.seconds).getAs[Long]("rows")
+      }
+      GateCounts(in, in - unique, unique - kept, kept)
+    }
+  }
+
+  /** Full run: parse → section → chunk → in-batch hash-dedup → cross-run
+    * hash gate ([[Upsert.storeGate]]) → append. Three Spark jobs against an
+    * existing store: the batch's shuffle on `content_hash`, the store hash
+    * column's shuffle, and the write; the counts ride the write. */
+  def ingest(spark: SparkSession, raw: Dataset[RawFiling], storePath: String): Ingested = {
+    val observed = Seq.fill(3)(Observation())
+    def counted(df: DataFrame, o: Observation) = df.observe(o, count(lit(1)).as("rows"))
+    val chunks = counted(chunkSections(extractSections(raw)).toDF(), observed(0))
+    val unique = counted(Upsert.dedupInBatch(chunks, "content_hash",
+      Seq(col("chunk_id").asc)), observed(1))
+    val kept = counted(Upsert.storeGate(unique, storePath,
+      StoreSchema("content_hash")), observed(2))
+    kept.write.mode("append").parquet(storePath)
+    new Ingested(spark.read.schema(StoreSchema).parquet(storePath), observed)
   }
 }

@@ -11,7 +11,7 @@ import graft.sources.Upsert
   * collect_signals.py:221-222,267-268). Two mappings are offered:
   *
   *  1. `dedupedForeachBatch` — EXACT parity: every micro-batch anti-joins
-  *     the accumulated seen-hash set (Upsert.dedupGate), then appends. This
+  *     the accumulated seen-hash set (Upsert.storeGate), then appends. This
   *     reproduces "duplicates dropped by hash forever", not windowed.
   *  2. `watermarkedDedup` — the native Structured Streaming shape:
   *     `dropDuplicates` on the hash with a long watermark on the ingest-time
@@ -38,21 +38,12 @@ object StreamIngest {
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
         val inBatch = Upsert.dedupInBatch(batch.toDF(), "content_hash",
           Seq(col(orderCol).asc))
-        // existence is a filesystem fact, not an exception pattern (same
-        // contract as bloomGatedForeachBatch): a transient READ failure on
-        // an EXISTING store must fail the batch so the engine retries it —
-        // swallowing it would silently disable cross-run dedup and append
-        // duplicates permanently
-        val fresh =
-          if (pathExists(spark, storePath))
-            Upsert.dedupGate(inBatch,
-              spark.read.parquet(storePath).select("content_hash"),
-              "content_hash")
-          else inBatch // first batch: nothing seen yet
-        fresh.write.mode("append").parquet(storePath)
+        // the store's hash column is read with the batch's own field as
+        // its schema: no inference job per micro-batch
+        Upsert.storeGate(inBatch, storePath, batch.schema("content_hash"))
+          .write.mode("append").parquet(storePath)
         ()
       }
 
@@ -83,6 +74,7 @@ object StreamIngest {
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
         val spark = batch.sparkSession
         import org.apache.spark.sql.graft.BloomFunctions
+        val hashField = batch.schema("content_hash")
         val inBatch = Upsert.dedupInBatch(batch.toDF(), "content_hash",
             Seq(col(orderCol).asc))
           .withColumn("_kh", xxhash64(col("content_hash")))
@@ -90,7 +82,8 @@ object StreamIngest {
         // transient READ failure on an existing store must fail the batch
         // (retried by the engine), never silently disable dedup
         val store =
-          if (pathExists(spark, storePath)) Some(spark.read.parquet(storePath))
+          if (Upsert.pathExists(spark, storePath))
+            Some(Upsert.storeHashes(spark, storePath, hashField))
           else None
         val (fresh, priorBits) = store match {
           case None => (inBatch, None) // first batch: nothing seen yet
@@ -110,9 +103,8 @@ object StreamIngest {
                 BloomFunctions.bloomMightContain(col("_bloom_f"), col("_kh")))
               .drop("_bloom_f")
             val definitelyNew = probed.filter(!col("_maybe")).drop("_maybe")
-            val verified = Upsert.dedupGate(
-              probed.filter(col("_maybe")).drop("_maybe"),
-              st, "content_hash")
+            val verified = Upsert.storeGate(
+              probed.filter(col("_maybe")).drop("_maybe"), storePath, hashField)
             (definitelyNew.unionByName(verified), Some(filter))
         }
         fresh.cache() // tiny (one micro-batch); consumed twice just below
@@ -130,7 +122,7 @@ object StreamIngest {
             case None => addBits
           }
           writeFilter(spark, filterPath, merged,
-            spark.read.parquet(storePath).count())
+            Upsert.storeHashes(spark, storePath, hashField).count())
         } finally fresh.unpersist()
         ()
       }
@@ -175,12 +167,6 @@ object StreamIngest {
       path: String): (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
     val p = new org.apache.hadoop.fs.Path(path)
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  private def pathExists(spark: org.apache.spark.sql.SparkSession,
-      path: String): Boolean = {
-    val (fs, p) = hadoopFs(spark, path)
-    fs.exists(p)
   }
 
   private def readFilterBytes(spark: org.apache.spark.sql.SparkSession,

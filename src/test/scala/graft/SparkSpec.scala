@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,4 +23,24 @@ object TestSpark {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** Spark jobs started by `body` on this thread (tagged by a job group so
+    * that no other thread's job is counted). */
+  protected def jobsIn(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"${getClass.getSimpleName}-${java.util.UUID.randomUUID()}"
+    val n = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group) n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, getClass.getSimpleName)
+      try body finally sc.clearJobGroup()
+      org.apache.spark.graft.ListenerBusDrain.drain(sc, 30000)
+      n.get()
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -2,11 +2,9 @@ package graft
 
 import java.nio.file.{Files, Path => JPath, StandardCopyOption}
 import java.util.concurrent.{Callable, Executors, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -19,26 +17,6 @@ class TablesSpec extends SparkSpec {
   private val sfDirs = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")
   private val tables = Seq("region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "documents", "embeddings", "events")
-
-  /** Spark jobs started by `body` on this thread (tagged by a job group so
-    * that no other thread's job is counted). */
-  private def jobsIn(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"tables-spec-${java.util.UUID.randomUUID()}"
-    val n = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group) n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "TablesSpec")
-      try body finally sc.clearJobGroup()
-      org.apache.spark.graft.ListenerBusDrain.drain(sc, 30000)
-      n.get()
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** Runs `body` in a fresh temp directory and deletes it afterwards. */
   private def withTempDir(body: JPath => Unit): Unit = {

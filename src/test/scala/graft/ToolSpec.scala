@@ -24,8 +24,8 @@ class ToolSpec extends SparkSpec {
     (ok, out.toString("UTF-8").linesIterator.toSeq)
   }
 
-  /** Spark jobs started while `body` runs. */
-  private def jobsIn(body: => Unit): Int = {
+  /** Spark jobs started on any thread while `body` runs. */
+  private def allJobsIn(body: => Unit): Int = {
     val n = new AtomicInteger(0)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
@@ -58,7 +58,7 @@ class ToolSpec extends SparkSpec {
         Seq("spill", sfDir) ++ names,
         Seq("plans", sfDir, "unused-dir", "x") ++ names.map("raw:" + _))) {
       var msg = ""
-      val jobs = jobsIn {
+      val jobs = allJobsIn {
         msg = intercept[IllegalArgumentException](run(args: _*)).getMessage
       }
       assert(msg.contains("q_no_such_a") && msg.contains("q_no_such_b") &&
@@ -74,6 +74,23 @@ class ToolSpec extends SparkSpec {
     assert(lines.size == 2, lines)
     assert(lines(0).matches("""\[benchone\] q_pricing_summary \d+\.\d\d s"""), lines)
     assert(lines(1).matches("""\[benchone\] q_filtered_revenue \d+\.\d\d s"""), lines)
+  }
+
+  test("the warm-up loads every table under the dir, so no timed query " +
+      "pays a schema inference") {
+    withTempDir { dir =>
+      val tables = new java.io.File(sfDir).listFiles().toSeq
+        .filter(_.getName.endsWith(".parquet"))
+      tables.foreach(f => Files.copy(f.toPath, dir.resolve(f.getName)))
+      val (ok, _) = run("time", dir.toString, "q_pricing_summary")
+      assert(ok)
+      val jobs = allJobsIn {
+        Tables.events(spark, dir.toString).queryExecution.optimizedPlan
+        tables.map(_.getName.stripSuffix(".parquet")).filterNot(_ == "events")
+          .foreach(t => Tables.load(spark, dir.toString, t).queryExecution.optimizedPlan)
+      }
+      assert(jobs === 0)
+    }
   }
 
   test("a failing query is reported and the run goes on, ending false") {

@@ -2,10 +2,45 @@ package graft.pipeline
 
 import graft.SparkSpec
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 class IngestPipelineSpec extends SparkSpec {
   import spark.implicits._
   import IngestPipeline._
+
+  /** Walks executed plans through AQE's plan and query-stage wrappers. */
+  private object Aqe extends AdaptiveSparkPlanHelper
+
+  private def newStore(): String =
+    Files.createTempDirectory("graft-ingest").toString + "/chunks"
+
+  /** The executed plan of the one parquet write `body` runs. */
+  private def writePlanOf(body: => Unit): SparkPlan = {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (Aqe.find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).nonEmpty)
+          plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.graft.ListenerBusDrain.drain(spark.sparkContext, 30000)
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.size === 1, s"expected one write, saw ${plans.size}")
+    plans.peek()
+  }
 
   private def filing(entity: Long, seed: String): RawFiling = {
     val para = (i: Int) => s"Paragraph $i $seed " + ("body " * 300)
@@ -51,18 +86,86 @@ class IngestPipelineSpec extends SparkSpec {
   }
 
   test("ingest is idempotent across runs (cross-run hash gate)") {
-    val store = Files.createTempDirectory("graft-ingest").toString + "/chunks"
+    val store = newStore()
     val raw = Seq(filing(1, "alpha"), filing(2, "beta")).toDS()
     val first = IngestPipeline.ingest(spark, raw, store)
-    val n1 = first.count()
+    val n1 = first.store.count()
     assert(n1 > 0)
+    assert(first.counts.crossRunDups === 0 && first.counts.kept === n1)
     // re-ingesting the same filings adds nothing
     val second = IngestPipeline.ingest(spark, raw, store)
-    assert(second.count() === n1)
+    assert(second.store.count() === n1)
+    assert(second.counts.kept === 0)
     // a new filing adds only its own chunks
     val third = IngestPipeline.ingest(spark, Seq(filing(3, "gamma")).toDS(), store)
-    assert(third.count() > n1)
-    assert(third.select("content_hash").distinct().count() === third.count())
+    val all = third.store
+    assert(all.count() > n1)
+    assert(all.select("content_hash").distinct().count() === all.count())
+  }
+
+  test("a batch against an existing store runs at most 3 Spark jobs; " +
+      "the returned store frame plans with none") {
+    val store = newStore()
+    IngestPipeline.ingest(spark, Seq(filing(1, "alpha")).toDS(), store)
+    val raw = Seq(filing(1, "alpha"), filing(2, "beta"), filing(2, "beta")).toDS()
+    val jobs = jobsIn {
+      IngestPipeline.ingest(spark, raw, store).store.queryExecution.optimizedPlan
+    }
+    // the batch's shuffle, the store hash column's shuffle, the write
+    assert(jobs <= 3, s"$jobs jobs")
+  }
+
+  test("the ingest write plans a shuffled hash anti-join: no broadcast, " +
+      "no aggregate") {
+    val store = newStore()
+    IngestPipeline.ingest(spark, Seq(filing(1, "alpha")).toDS(), store)
+    val plan = writePlanOf {
+      IngestPipeline.ingest(spark, Seq(filing(1, "alpha"), filing(2, "beta")).toDS(), store)
+    }
+    val gates = Aqe.collect(plan) {
+      case j: ShuffledHashJoinExec if j.joinType == LeftAnti => j
+    }
+    assert(gates.size === 1, plan.toString)
+    assert(gates.head.buildSide === BuildRight)
+    assert(Aqe.collect(plan) {
+      case b: BroadcastExchangeLike => b
+      case b: BroadcastHashJoinExec => b
+      case a: BaseAggregateExec => a
+    }.isEmpty, plan.toString)
+  }
+
+  test("the returned store frame has the bare parquet read's schema") {
+    val store = newStore()
+    val r = IngestPipeline.ingest(spark,
+      Seq(filing(1, "alpha"), filing(2, "beta")).toDS(), store)
+    assert(r.store.schema === spark.read.parquet(store).schema)
+    assert(StoreSchema === spark.read.parquet(store).schema)
+  }
+
+  test("observed gate counts equal an independent recount") {
+    val store = newStore()
+    IngestPipeline.ingest(spark, Seq(filing(1, "alpha"), filing(2, "beta")).toDS(), store)
+    val before = spark.read.parquet(store).count()
+    // filing 2 again: cross-run duplicates; filing 3 twice: in-batch ones
+    val batch = Seq(filing(2, "beta"), filing(3, "gamma"), filing(3, "gamma"),
+      filing(4, "delta"))
+    val counts = IngestPipeline.ingest(spark, batch.toDS(), store).counts
+    val chunks = chunkSections(extractSections(batch.toDS()))
+    val rowsIn = chunks.count()
+    val unique = chunks.select("content_hash").distinct().count()
+    val kept = spark.read.parquet(store).count() - before
+    assert(counts === GateCounts(rowsIn, rowsIn - unique, unique - kept, kept))
+    assert(counts.inBatchDups > 0 && counts.crossRunDups > 0 && counts.kept > 0,
+      counts.toString)
+  }
+
+  test("an empty batch appends nothing and counts zeros") {
+    val store = newStore()
+    IngestPipeline.ingest(spark, Seq(filing(1, "alpha")).toDS(), store)
+    val before = spark.read.parquet(store).count()
+    val r = IngestPipeline.ingest(spark, Seq.empty[RawFiling].toDS(), store)
+    assert(r.counts === GateCounts(0, 0, 0, 0))
+    assert(r.store.count() === before)
   }
 
   test("binaryFile route: real HTML + real PDF bytes walk the full " +

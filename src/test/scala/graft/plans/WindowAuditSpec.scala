@@ -22,19 +22,15 @@ class WindowAuditSpec extends SparkSpec {
     * constant-partition window must be on this list, where each entry
     * names the bounded frame that justifies it. A new query reaching for
     * the pmod trick fails the suite until a human adds it HERE with its
-    * bound — the trick cannot silently hide a genuinely unbounded funnel. */
+    * bound — the trick cannot silently hide a genuinely unbounded funnel.
+    * The list is audited the other way too: an entry whose query plans no
+    * constant-partition window guards nothing and fails the suite. */
   private val BoundedGlobalWindowQueries = Map(
-    "q_quantity_quantiles" -> "histogram buckets (≤ #distinct grid values / 16384)",
     "q_approx_quantile_bounds" -> "histogram buckets",
     "q_composite_scores" -> "score-grid buckets (two-pass percentile)",
     "q_full_scores" -> "score-grid buckets (two-pass percentile)",
-    "q_quantile_normalize" -> "rank buckets",
     "q_weekly_revenue_wow" -> "calendar weeks (~350 aggregate rows)",
-    "q_order_gaps" -> "distinct order dates (aggregate rows)",
     "q_vocab_encode" -> "vocabulary ids (V rows)",
-    "q_token_shards" -> "shard-packing prefix buckets",
-    "q_theta_setops" -> "K sketch rows",
-    "q_kmv_distinct" -> "K sketch rows",
     "q_dsir_importance" -> "top-N survivors of TakeOrdered (≤ 20 rows)",
     "q_bpe_merge_step" -> "top-K survivors of TakeOrdered (≤ 20 rows)",
     "q_perplexity_buckets" -> "histogram buckets (HistQuantiles prefix sum)",
@@ -46,7 +42,6 @@ class WindowAuditSpec extends SparkSpec {
     "q_skyline_parts" -> "price-grid coarse buckets (two-pass cummax offsets)",
     "q_survival_km" -> "duration-grid frames (calendar-bounded; GridCum + log cumsum)",
     "q_lorenz_deciles" -> "spend-grid coarse buckets (GridCum offset pass)",
-    "q_rfm_scores" -> "histogram buckets (HistQuantiles quintile cuts ×3)",
     "q_conversion_time" -> "histogram buckets (HistQuantiles p50/p90 cuts)",
     "q_roc_auc" -> "score-grid coarse buckets (GridCum offset pass)",
     "q_winsorized_mean" -> "histogram buckets (HistQuantiles p05/p95 cuts)",
@@ -70,5 +65,15 @@ class WindowAuditSpec extends SparkSpec {
       "constant-partition windows without a declared bound — add to " +
         s"BoundedGlobalWindowQueries with the frame's bound, or partition " +
         s"properly:\n${undeclared.mkString("\n")}")
+  }
+
+  test("every declared bounded global window is planned by its query") {
+    val planned = FleetPlans.all.collect {
+      case (name, Right(f)) if f.pmodWindows.nonEmpty => name
+    }.toSet
+    val stale = BoundedGlobalWindowQueries.keySet -- planned
+    assert(stale.isEmpty,
+      "BoundedGlobalWindowQueries entries whose query plans no " +
+        s"constant-partition window — drop them: ${stale.toSeq.sorted.mkString(", ")}")
   }
 }
