@@ -84,18 +84,23 @@ object Det {
   * to build and hold than row blocks (the round-9 sf10 lesson).
   */
 object Cached {
-  private val audit = new ThreadLocal[java.lang.Boolean] {
-    override def initialValue: java.lang.Boolean = false
-  }
-  // r16: posture mode — persists/materialization run exactly as in real
-  // mode, but PlanPin wrapping is skipped, so the EXECUTED plan keeps the
-  // InMemoryTableScan/window/join structure visible for the plan-posture
+  // Real: persist, count and PlanPin-wrap. Audit (auditPlan): nothing
+  // executes. Posture (r16, posturePlan): persists and counts as in real
+  // mode but skips the PlanPin wrap, so the EXECUTED plan keeps the
+  // InMemoryTableScan/window/join structure visible to the plan-posture
   // guards (PlanSpec's scoring-DAG test asserts on the raw executed plan;
   // under the pins every shared frame reads as an opaque `Scan
-  // ExistingRDD` — the r15 537/538 failure). Execution semantics are
-  // identical: the pin never changes rows, only plan size.
-  private val noPin = new ThreadLocal[java.lang.Boolean] {
-    override def initialValue: java.lang.Boolean = false
+  // ExistingRDD`). The pin never changes rows, only plan size.
+  private sealed trait Mode
+  private case object Real extends Mode
+  private case object Audit extends Mode
+  private case object Posture extends Mode
+  private val mode = ThreadLocal.withInitial[Mode](() => Real)
+
+  private def under[T](m: Mode)(body: => T): T = {
+    val prev = mode.get()
+    mode.set(m)
+    try body finally mode.set(prev)
   }
 
   /** Build with [[withPinned]] and [[pinned]] transparent — no persist,
@@ -103,19 +108,13 @@ object Cached {
     * stays visible to the fleet plan audits (PlanSpec/WindowAuditSpec/
     * `graft.Tool plans`) without the audits paying (or racing) the pins'
     * materialization. */
-  def auditPlan[T](body: => T): T = {
-    audit.set(true)
-    try body finally audit.set(false)
-  }
+  def auditPlan[T](body: => T): T = under(Audit)(body)
 
   /** Build with persist/materialization as in real mode but WITHOUT
     * PlanPin wrapping — the executed-plan posture (cache scans, window
     * partitioning, join strategies) stays inspectable. For plan-posture
     * tests only; never used by the timed runners. */
-  def posturePlan[T](body: => T): T = {
-    noPin.set(true)
-    try body finally noPin.set(false)
-  }
+  def posturePlan[T](body: => T): T = under(Posture)(body)
 
   /** Persist + materialize `df` and return its plan-pinned twin — the
     * single-frame seam for builders that manage their own frame scoping
@@ -124,10 +123,10 @@ object Cached {
     * r15 unconditional dims0.count() violated, the r15 advisor's high
     * item); posture mode persists but skips the pin. */
   def pinned(df: DataFrame): DataFrame = {
-    if (audit.get()) return df
+    if (mode.get() == Audit) return df
     val p = df.persist()
     p.count()
-    if (noPin.get()) p else org.apache.spark.sql.graft.PlanPin.truncated(p)
+    if (mode.get() == Posture) p else org.apache.spark.sql.graft.PlanPin.truncated(p)
   }
 
   /** Persist + lineage truncation (round 15): `body` receives a
@@ -141,12 +140,12 @@ object Cached {
     * original (transparent) frames pass through so the fleet plan audits
     * still see the full composition. */
   def withPinned(inputs: DataFrame*)(body: Seq[DataFrame] => DataFrame): DataFrame = {
-    if (audit.get()) return body(inputs)
+    if (mode.get() == Audit) return body(inputs)
     inputs.foreach(_.persist())
     try {
       inputs.foreach(_.count())
       val shared =
-        if (noPin.get()) inputs
+        if (mode.get() == Posture) inputs
         else inputs.map(org.apache.spark.sql.graft.PlanPin.truncated)
       val out = body(shared)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
